@@ -52,34 +52,27 @@ def cover_bbox(min_lon: float, min_lat: float, max_lon: float, max_lat: float, r
     return [f"r{res}:{r}:{c}" for r in range(r0, r1 + 1) for c in range(c0, c1 + 1)]
 
 
-def cover_polygon(mp: list[list[np.ndarray]], res: int) -> list[str]:
-    """Cells intersecting a multipolygon — vectorized, conservative.
+def cover_polygon_full(mp: list[list[np.ndarray]], res: int) -> list[tuple[str, bool]]:
+    """Cells intersecting a multipolygon — vectorized, conservative —
+    each with an interior flag.
 
-    Guaranteed superset of the exact covering (false positives are
-    filtered downstream by the point-in-polygon confirm; false
-    negatives would lose join candidates, so none are allowed):
+    The cell set is a guaranteed superset of the exact covering (false
+    positives are filtered downstream by the point-in-polygon confirm;
+    false negatives would lose join candidates, so none are allowed):
 
     1. interior: all bbox cells whose center lies inside (one batched
        ray-cast over the full center grid);
     2. boundary: cells containing any ring vertex or any edge sample
        (step = cell_size/2), dilated by one ring — any cell an edge
        passes through is within one cell of a sample cell.
-    """
-    r0, c0, marked, _full = _cover_masks(mp, res)
-    rr_idx, cc_idx = np.nonzero(marked)
-    return [f"r{res}:{r0 + r}:{c0 + c}" for r, c in zip(rr_idx, cc_idx)]
 
-
-def cover_polygon_full(mp: list[list[np.ndarray]], res: int) -> list[tuple[str, bool]]:
-    """Covering WITH an interior flag per cell: ``full=True`` cells lie
-    ENTIRELY inside the polygon (the S2 'interior covering' idea), so a
-    point landing in one needs NO point-in-polygon confirm. Soundness:
-    a cell whose center is inside and which is NOT in the dilated
-    boundary set cannot be crossed by any boundary edge (edge samples
-    are spaced at half a cell edge, so every boundary-crossed cell is a
-    sample cell or its 8-neighbour — all in the dilated set); a cell
-    with an inside center and no boundary crossing is fully interior.
-    Same cell SET as cover_polygon — only the flag is added."""
+    ``full=True`` cells lie ENTIRELY inside the polygon (the S2
+    'interior covering' idea), so a point landing in one needs NO
+    point-in-polygon confirm. Soundness: a cell whose center is inside
+    and which is NOT in the dilated boundary set cannot be crossed by
+    any boundary edge (every boundary-crossed cell is a sample cell or
+    its 8-neighbour — all in the dilated set); a cell with an inside
+    center and no boundary crossing is fully interior."""
     r0, c0, marked, full = _cover_masks(mp, res)
     rr_idx, cc_idx = np.nonzero(marked)
     return [
@@ -88,7 +81,7 @@ def cover_polygon_full(mp: list[list[np.ndarray]], res: int) -> list[tuple[str, 
 
 
 def _cover_masks(mp: list[list[np.ndarray]], res: int):
-    """(r0, c0, marked, full) boolean grids for cover_polygon[_full]."""
+    """(r0, c0, marked, full) boolean grids for cover_polygon_full."""
     from . import geometry as G
 
     size = cell_size_deg(res)
@@ -147,34 +140,15 @@ def _cover_masks(mp: list[list[np.ndarray]], res: int):
 MAX_COVER_CELLS = 512
 
 
-def cover_polygon_adaptive(
-    mp: list[list[np.ndarray]], base_res: int, max_cells: int = MAX_COVER_CELLS
-) -> list[str]:
-    """Coarsen resolution per polygon until the covering fits max_cells
-    (the H3 'compact' analogue): a country-sized polygon covers at r2,
-    a city block at base_res. The pages side joins at every resolution
-    present (multi-res equi join in operators/spatial_join.py), so big
-    polygons cost O(max_cells) index rows instead of O(area)."""
-    from . import geometry as G
-
-    res = base_res
-    while res > 0:
-        size = cell_size_deg(res)
-        min_lon, min_lat, max_lon, max_lat = G.bbox(mp)
-        est = ((max_lat - min_lat) / size + 2) * ((max_lon - min_lon) / size + 2)
-        if est <= max_cells:
-            cover = cover_polygon(mp, res)
-            if len(cover) <= max_cells:
-                return cover
-        res -= 1
-    return cover_polygon(mp, 0)
-
-
 def cover_polygon_adaptive_full(
     mp: list[list[np.ndarray]], base_res: int, max_cells: int = MAX_COVER_CELLS
 ) -> list[tuple[str, bool]]:
-    """cover_polygon_adaptive with the interior flag — identical cell
-    set and resolution choice, flags per cover_polygon_full."""
+    """Coarsen resolution per polygon until the flagged covering fits
+    max_cells (the H3 'compact' analogue): a country-sized polygon
+    covers at r2, a city block at base_res. The pages side joins at
+    every resolution present (multi-res equi join in
+    operators/spatial_join.py), so big polygons cost O(max_cells) index
+    rows instead of O(area)."""
     from . import geometry as G
 
     res = base_res
@@ -188,41 +162,6 @@ def cover_polygon_adaptive_full(
                 return cover
         res -= 1
     return cover_polygon_full(mp, 0)
-
-
-def _rect_intersects_mp(lo_lon, lo_lat, hi_lon, hi_lat, mp) -> bool:
-    from . import geometry as G
-
-    probes = np.array(
-        [
-            [lo_lon, lo_lat],
-            [hi_lon, lo_lat],
-            [hi_lon, hi_lat],
-            [lo_lon, hi_lat],
-            [(lo_lon + hi_lon) / 2.0, (lo_lat + hi_lat) / 2.0],
-        ]
-    )
-    if G.points_in_multipolygon(probes, mp).any():
-        return True
-    # any polygon vertex inside the rect
-    for poly in mp:
-        for ring in poly:
-            inside = (
-                (ring[:, 0] >= lo_lon)
-                & (ring[:, 0] <= hi_lon)
-                & (ring[:, 1] >= lo_lat)
-                & (ring[:, 1] <= hi_lat)
-            )
-            if inside.any():
-                return True
-    # edge crossing: clip each ring's segments against the rect
-    rect = G.rect_ring(lo_lon, lo_lat, hi_lon, hi_lat)
-    for poly in mp:
-        for ring in poly:
-            clipped = G.clip_convex(ring, rect)
-            if len(clipped) >= 3:
-                return True
-    return False
 
 
 def parent_cell(cell_id: str) -> str:

@@ -56,21 +56,6 @@ def token_count_udf(text: pd.Series) -> pd.Series:
     return T.token_count(text).astype("int64")
 
 
-@pandas_udf(StringType())
-def md5_fingerprint_udf(text: pd.Series) -> pd.Series:
-    return T.md5_fingerprint(text)
-
-
-@pandas_udf(LongType())
-def rolling_fingerprint_udf(text: pd.Series) -> pd.Series:
-    return T.rolling_fingerprint(text).astype("int64")
-
-
-@pandas_udf(ArrayType(LongType()))
-def minhash_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: T.minhash_signature(t or ""))
-
-
 @pandas_udf(LongType())
 def simhash_udf(text: pd.Series) -> pd.Series:
     return text.map(lambda t: T.simhash64(t or "")).astype("int64")
@@ -128,21 +113,6 @@ def iou_udf(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"i_o_u": ious, "area_diff": diffs})
 
 
-@pandas_udf(DoubleType())
-def bearing_udf(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-    """G8 initial compass bearing (conflate.py:338-355) — the numpy
-    kernel over the Arrow batch; oracle-checked against the closed-form
-    atan2 formula in SQL."""
-    return pd.Series(
-        G.compass_bearing(
-            lon1.to_numpy(np.float64),
-            lat1.to_numpy(np.float64),
-            lon2.to_numpy(np.float64),
-            lat2.to_numpy(np.float64),
-        )
-    )
-
-
 _VALID_SCHEMA = StructType(
     [
         StructField("is_valid", BooleanType()),
@@ -188,19 +158,6 @@ def utm_roundtrip_udf(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"lon": lo, "lat": la})
 
 
-@pandas_udf(ArrayType(StringType()))
-def cover_wkt_udf(wkt: pd.Series) -> pd.Series:
-    """G21 polygon→covering-cell-set (boundary side of the cell hash
-    join). Adaptive resolution: big polygons coarsen until the covering
-    fits MAX_COVER_CELLS, so index size is O(1) per polygon."""
-    from ..datagen import CELL_RES
-
-    memo = _parse_memo(wkt)
-    return wkt.map(
-        lambda w: C.cover_polygon_adaptive(memo[w], CELL_RES) if w is not None else []
-    )
-
-
 _COVER_FULL_SCHEMA = ArrayType(
     StructType(
         [StructField("cell", StringType()), StructField("full", BooleanType())]
@@ -210,10 +167,12 @@ _COVER_FULL_SCHEMA = ArrayType(
 
 @pandas_udf(_COVER_FULL_SCHEMA)
 def cover_wkt_full_udf(wkt: pd.Series) -> pd.Series:
-    """cover_wkt_udf + a fully-interior flag per cell (S2 interior
-    covering): points landing in a full=True cell are inside the polygon
-    by construction and skip the point-in-polygon confirm entirely.
-    Same cell set and adaptive resolution as cover_wkt_udf."""
+    """G21 polygon→covering-cell-set (boundary side of the cell hash
+    join) with a fully-interior flag per cell (S2 interior covering):
+    points landing in a full=True cell are inside the polygon by
+    construction and skip the point-in-polygon confirm entirely.
+    Adaptive resolution: big polygons coarsen until the covering fits
+    MAX_COVER_CELLS, so index size is O(1) per polygon."""
     from ..datagen import CELL_RES
 
     memo = _parse_memo(wkt)
@@ -222,27 +181,6 @@ def cover_wkt_full_udf(wkt: pd.Series) -> pd.Series:
         if w is not None
         else []
     )
-
-
-_ENDPOINT_SCHEMA = StructType(
-    [
-        StructField("endpoint_dist_m", DoubleType()),
-        StructField("should_reverse", BooleanType()),
-    ]
-)
-
-
-@pandas_udf(_ENDPOINT_SCHEMA)
-def endpoint_match_udf(src: pd.Series, osm: pd.Series) -> pd.DataFrame:
-    """G7 (conflate.py:278-294) per coords-array pair."""
-    d = np.zeros(len(src))
-    r = np.zeros(len(src), dtype=bool)
-    for i, (a, b) in enumerate(zip(src, osm)):
-        if a is None or b is None or len(a) < 2 or len(b) < 2:
-            d[i], r[i] = np.inf, False
-            continue
-        d[i], r[i] = G.endpoint_match(np.asarray(list(a)), np.asarray(list(b)))
-    return pd.DataFrame({"endpoint_dist_m": d, "should_reverse": r})
 
 
 @pandas_udf(DoubleType())
@@ -269,9 +207,11 @@ def cell_expr(lon_col, lat_col, res: int):
 
 
 def bearing_expr(lon1, lat1, lon2, lat2):
-    """G8 compass bearing as built-in SQL math (conflate.py:338-355)."""
+    """G8 compass bearing as built-in SQL math (conflate.py:338-355).
+    Longitudes convert to radians before the difference, as in the
+    compass_bearings oracle."""
     lat1r, lat2r = F.radians(lat1), F.radians(lat2)
-    dlon = F.radians(lon2 - lon1)
+    dlon = F.radians(lon2) - F.radians(lon1)
     x = F.sin(dlon) * F.cos(lat2r)
     y = F.cos(lat1r) * F.sin(lat2r) - F.sin(lat1r) * F.cos(lat2r) * F.cos(dlon)
     return F.pmod(F.degrees(F.atan2(x, y)) + F.lit(360.0), F.lit(360.0))

@@ -16,13 +16,9 @@ full cross product.
 
 from __future__ import annotations
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
-from ..functions import text as T
 from ..functions.udfs import simhash_udf
 
 N_HASHES = 16
@@ -33,10 +29,10 @@ _M61 = 2305843009213693951  # 2^61 - 1
 _GOLD = 0x9E3779B9
 
 
-def shingle_expr(t):
-    """Word-5-shingles as a JVM array expression — identical semantics to
-    functions.text.shingles / the DuckDB oracle (string_split_regex on
-    trim(lower(t)), whole-join when fewer than k words).
+def shingle_expr(t, k: int = K_SHINGLE):
+    """Word-k-shingles as a JVM array expression — the DuckDB oracles'
+    semantics (string_split_regex on trim(lower(t)), whole-join when
+    fewer than k words; an empty text yields the one shingle '').
 
     The regex split is bound to a lambda variable via the
     transform-over-singleton idiom: higher-order-function lambdas are NOT
@@ -48,11 +44,11 @@ def shingle_expr(t):
     def shingles_of(w):
         n = F.size(w)
         return F.when(
-            n < K_SHINGLE, F.array(F.array_join(w, " "))
+            n < k, F.array(F.array_join(w, " "))
         ).otherwise(
             F.transform(
-                F.sequence(F.lit(1), n - K_SHINGLE + 1),
-                lambda j: F.array_join(F.slice(w, j, K_SHINGLE), " "),
+                F.sequence(F.lit(1), n - k + 1),
+                lambda j: F.array_join(F.slice(w, j, k), " "),
             )
         )
 
@@ -195,53 +191,12 @@ def prefix_block_pairs(
     )
 
 
-@pandas_udf(DoubleType())
-def jaccard_udf(ta: pd.Series, tb: pd.Series) -> pd.Series:
-    def one(a, b):
-        sa, sb = set(T.shingles(a or "")), set(T.shingles(b or ""))
-        if not sa and not sb:
-            return 1.0
-        u = len(sa | sb)
-        return len(sa & sb) / u if u else 0.0
-
-    return pd.Series([one(a, b) for a, b in zip(ta, tb)])
-
-
-@pandas_udf(DoubleType())
-def containment3_udf(ta: pd.Series, tb: pd.Series) -> pd.Series:
-    """|shingles(a) ∩ shingles(b)| / |shingles(a)| — directed containment."""
-
-    def one(a, b):
-        sa = set(T.shingles(a or "", k=3))
-        sb = set(T.shingles(b or "", k=3))
-        if not sa:
-            return 0.0
-        return len(sa & sb) / len(sa)
-
-    return pd.Series([one(a, b) for a, b in zip(ta, tb)])
-
-
-@pandas_udf(DoubleType())
-def jaccard3_udf(ta: pd.Series, tb: pd.Series) -> pd.Series:
-    def one(a, b):
-        sa, sb = set(T.shingles(a or "", k=3)), set(T.shingles(b or "", k=3))
-        if not sa and not sb:
-            return 1.0
-        u = len(sa | sb)
-        return len(sa & sb) / u if u else 0.0
-
-    return pd.Series([one(a, b) for a, b in zip(ta, tb)])
-
-
 def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Full MinHash-LSH dedup: candidates → exact-Jaccard verify.
 
     The verify runs ENTIRELY JVM-side: distinct shingle arrays +
     array_intersect reproduce set-Jaccard bit-for-bit (|∪| = |A|+|B|−|∩|,
-    same IEEE double division). The previous jaccard_udf re-shingled both
-    texts in per-row Python AND was evaluated twice — once under the
-    pushed-down threshold filter and once in the projection (guide §4.4,
-    two ArrowEvalPython nodes in plans/r08/dedup_minhash_lsh_before.txt)."""
+    same IEEE double division)."""
     pairs = lsh_candidate_pairs(docs)
     # spread + broadcast direction: the shingle-array side is the HEAVY
     # one (~1.4 KB of distinct shingles per doc), so it must stream

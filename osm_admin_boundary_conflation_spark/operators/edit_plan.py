@@ -23,7 +23,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..functions.udfs import endpoint_match_udf
+from ..functions.udfs import haversine_expr
 
 
 def edit_plan(
@@ -52,12 +52,19 @@ def edit_plan(
     d = F.broadcast(todo).join(s, "way_id")
     d = F.broadcast(d).join(o, "osm_way_id")
 
-    # reversal decision exactly as the reference takes it (G7)
-    d = d.withColumn("_em", endpoint_match_udf(F.col("src_coords"), F.col("osm_coords")))
+    # reversal decision exactly as the reference takes it (G7,
+    # functions.geometry.endpoint_match): reverse iff the source's last
+    # point is nearer the osm start than its first point is. Arguments
+    # in endpoint_match's order, so the float operations match. Empty
+    # or null coords read as null points, a null test, and no reversal.
+    o0 = F.get("osm_coords", 0)
+    s0 = F.get("src_coords", 0)
+    s1 = F.get("src_coords", F.size("src_coords") - 1)
+    d11 = haversine_expr(o0[0], o0[1], s0[0], s0[1])
+    d12 = haversine_expr(o0[0], o0[1], s1[0], s1[1])
     d = d.withColumn(
-        "src_aligned",
-        F.when(F.col("_em.should_reverse"), F.reverse("src_coords")).otherwise(F.col("src_coords")),
-    ).drop("_em", "osm_coords")
+        "src_aligned", F.when(d12 < d11, F.reverse("src_coords")).otherwise(F.col("src_coords"))
+    ).drop("osm_coords")
 
     d = d.withColumn("n_src", F.size("src_aligned")).withColumn("n_osm", F.size("osm_nodes"))
     d = d.withColumn("src_last", F.element_at("src_aligned", -1))

@@ -15,7 +15,7 @@ shared-border way segments:
       (translation.py:295-324)
 
 Scale: corner detection is one explode + groupBy count on node_id;
-splitting is a scalar Arrow UDF per way; dedup is a groupBy on the
+splitting is a per-way JVM expression; dedup is a groupBy on the
 fingerprint — three shuffles, all on well-distributed keys.
 """
 
@@ -25,7 +25,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType, StringType
+from pyspark.sql.types import StringType
 
 from ..functions.geometry import canonical_node_fingerprint
 
@@ -44,56 +44,18 @@ from ..functions.geometry import canonical_node_fingerprint
 SPLIT_DISTRIBUTED_MIN = 4_000_000
 
 
-@pandas_udf(ArrayType(ArrayType(LongType())))
-def split_way_udf(node_ids: pd.Series, corner_pos: pd.Series) -> pd.Series:
-    """G13: split a way's node list at corner positions. Closed ways
-    wrap around: the piece after the last corner merges with the piece
-    before the first (translation.py:72-79)."""
-
-    def one(nodes, corners) -> list[list[int]]:
-        nodes = list(nodes)
-        if not nodes:
-            return []
-        closed = len(nodes) > 1 and nodes[0] == nodes[-1]
-        core = nodes[:-1] if closed else nodes
-        corner_list = [] if corners is None else list(corners)
-        idxs = sorted(int(i) for i in corner_list if i < len(core))
-        if not idxs:
-            return [nodes]
-        if closed:
-            segs = []
-            k = len(idxs)
-            for j in range(k):
-                a, b = idxs[j], idxs[(j + 1) % k]
-                if j < k - 1:
-                    segs.append(core[a : b + 1])
-                else:  # wraparound merge
-                    segs.append(core[a:] + core[: b + 1])
-            return segs
-        segs = []
-        prev = 0
-        for i in idxs:
-            if i > prev:
-                segs.append(core[prev : i + 1])
-            prev = i
-        if prev < len(core) - 1:
-            segs.append(core[prev:])
-        return segs
-
-    return pd.Series([one(n, c) for n, c in zip(node_ids, corner_pos)])
-
-
 @pandas_udf(StringType())
 def fingerprint_udf(node_ids: pd.Series) -> pd.Series:
     return node_ids.map(lambda ids: canonical_node_fingerprint(list(ids)))
 
 
 def split_way_expr(node_ids, corner_pos):
-    """G13 splitting as a pure JVM expression — behaviourally identical
-    to split_way_udf (differential-tested in tests/test_segmentation.py)
-    but whole-stage-codegen'd: no Arrow boundary, no per-way Python.
-    The 300k-node strip-world perimeter alone cost ~2 s in a single
-    Python task through the UDF (guide §4.1: prefer built-ins).
+    """G13: split a way's node list at corner positions, as a pure JVM
+    expression (whole-stage-codegen'd: no Arrow boundary, no per-way
+    Python). Closed ways wrap around: the piece after the last corner
+    merges with the piece before the first (translation.py:72-79).
+    Differential-tested against a plain-Python reference splitter in
+    tests/test_segmentation.py.
 
     Every derived array (core, corner indexes, cut points) is bound to a
     lambda variable via the transform-over-singleton idiom; referencing
@@ -112,8 +74,8 @@ def split_way_expr(node_ids, corner_pos):
         def with_idxs(ix):
             k = F.size(ix)
             # open way: segments between consecutive cut points
-            # [0] + idxs + [nc-1] (deduped) — matches the UDF's
-            # prev/emit loop including corners at 0 or nc-1
+            # [0] + idxs + [nc-1] (deduped), so corners at 0 or nc-1
+            # emit no empty or one-node piece
             cuts = F.array_distinct(
                 F.concat(F.array(F.lit(0)), ix, F.array((nc - 1).cast("int")))
             )
@@ -195,7 +157,7 @@ def split_ways_distributed(ways: DataFrame, corners: DataFrame) -> DataFrame:
       into the adjacent segment; closed ways wrap the head rows after
       the tail with ord = pos + core_n) → groupBy (way, seg) reassembly.
 
-    Byte-identical to split_way_udf (differential-tested, see
+    Byte-identical to split_way_expr (differential-tested, see
     tests/test_segmentation.py). → (way_id, admin_level, seg_nodes)."""
     n = F.size("node_ids")
     is_closed = (n > 1) & (F.element_at("node_ids", 1) == F.element_at("node_ids", -1))
@@ -276,7 +238,7 @@ def segment_ways(ways: DataFrame, lint_observation=None) -> DataFrame:
     small = ways.filter(F.size("node_ids") < SPLIT_DISTRIBUTED_MIN)
     big = ways.filter(F.size("node_ids") >= SPLIT_DISTRIBUTED_MIN)
 
-    # small (in-model OSM) ways: per-way Arrow UDF, parallel across ways.
+    # small (in-model OSM) ways: per-way JVM split, parallel across ways.
     # Corner positions computed for the small side only — a giant way
     # would otherwise funnel a huge collect_set through one group.
     pos = small.select("way_id", F.posexplode("node_ids").alias("pos", "node_id"))
@@ -288,10 +250,9 @@ def segment_ways(ways: DataFrame, lint_observation=None) -> DataFrame:
     w = small.join(corner_pos, "way_id", "left").withColumn(
         "corner_pos", F.coalesce("corner_pos", F.array().cast("array<int>"))
     )
-    # JVM expression split (split_way_expr ≡ split_way_udf, differential-
-    # tested): removes the Arrow boundary from the hottest segmentation
-    # stage — the pandas UDF cost ~4 s of the 5.7 s segment_tiles wall
-    # at sf0.1, ~2 s of it the 300k-node perimeter in one Python task.
+    # JVM expression split, no Arrow boundary: a pandas-UDF splitter
+    # cost ~4 s of the 5.7 s segment_tiles wall at sf0.1, ~2 s of it
+    # the 300k-node perimeter in one Python task.
     segs_small = w.select(
         "way_id",
         "admin_level",

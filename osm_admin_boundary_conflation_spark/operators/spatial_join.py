@@ -29,10 +29,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..datagen import CELL_RES
 from ..functions.udfs import (
     cell_expr,
     cover_wkt_full_udf,
-    cover_wkt_udf,
     extract_geo_udf,
     extract_text_udf,
     point_in_wkt_udf,
@@ -43,35 +43,21 @@ VERDICT_NO_MATCH = "NO_MATCH"
 VERDICT_MULTIPLE = "MULTIPLE_MATCH"
 
 
-def extract_pages_geo(pages: DataFrame, res: int, observe: bool = False) -> DataFrame:
+def extract_pages_geo(pages: DataFrame, res: int) -> DataFrame:
     """pages(url, html, ...) → + text, lat, lon, cell_id.
 
-    With observe=True, attaches named observed metrics (A9 — the Spark
-    analogue of the reference's running diagnostic counters,
-    translation.py:247): rows scanned + rows with extractable geo,
-    retrievable via df.observation / QueryExecutionListener."""
+    Attach observed metrics with ``.observe`` on the result (A9 — the
+    Spark analogue of the reference's running diagnostic counters,
+    translation.py:247); they ride the consumer's action."""
     d = pages.withColumn("text", extract_text_udf("html"))
     d = d.withColumn("_geo", extract_geo_udf("text"))
     d = d.withColumn("lat", F.col("_geo.lat")).withColumn("lon", F.col("_geo.lon")).drop("_geo")
-    d = d.withColumn("cell_id", cell_expr(F.col("lon"), F.col("lat"), res))
-    if observe:
-        d = d.observe(
-            "extract_metrics",
-            F.count(F.lit(1)).alias("rows_in"),
-            F.count("lat").alias("rows_with_geo"),
-        )
-    return d
-
-
-def boundary_cells(boundaries: DataFrame, res: int) -> DataFrame:
-    """boundaries(level9_id, wkt) → one row per (boundary, covering cell)."""
-    return boundaries.withColumn("cell_id", F.explode(cover_wkt_udf("wkt")))
+    return d.withColumn("cell_id", cell_expr(F.col("lon"), F.col("lat"), res))
 
 
 def geotag_pages(
     pages: DataFrame,
     boundaries: DataFrame,
-    res: int = 6,
     broadcast_boundaries: bool = True,
     n_salt: int = 0,
 ) -> DataFrame:
@@ -80,10 +66,11 @@ def geotag_pages(
     Exactly-one-match semantics mirror conflate.py:516-556: zero
     candidates → NO_MATCH, one → MATCHED, several → MULTIPLE_MATCH with
     error_context = comma-joined sorted boundary ids
-    (conflate.py:528 formatting).
+    (conflate.py:528 formatting). Page cells use CELL_RES, the base
+    resolution of the boundary covering.
     """
-    pg = extract_pages_geo(pages, res).select("url", "lat", "lon", "cell_id")
-    return geotag_points(pg, boundaries, res, broadcast_boundaries, n_salt)
+    pg = extract_pages_geo(pages, CELL_RES).select("url", "lat", "lon", "cell_id")
+    return geotag_points(pg, boundaries, broadcast_boundaries, n_salt)
 
 
 AUTO_BROADCAST_MAX_BOUNDARIES = 100_000
@@ -106,7 +93,6 @@ def pick_geotag_strategy(boundaries: DataFrame) -> tuple[bool, int]:
 def geotag_points(
     pg: DataFrame,
     boundaries: DataFrame,
-    res: int = 6,
     broadcast_boundaries: bool = True,
     n_salt: int = 0,
 ) -> DataFrame:

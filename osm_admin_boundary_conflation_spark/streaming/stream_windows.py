@@ -17,6 +17,8 @@ Structured-Streaming-native form of the tumbling-window rollup
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
@@ -55,6 +57,15 @@ def stream_window_counts(
     )
 
 
+def _first_batch_id(checkpoint_dir: str) -> int:
+    """Id of the first micro-batch a query started on ``checkpoint_dir``
+    runs: 0 for a fresh checkpoint, else one past the last batch in the
+    commit log."""
+    commits = os.path.join(checkpoint_dir, "commits")
+    ids = [int(f) for f in os.listdir(commits) if f.isdigit()] if os.path.isdir(commits) else []
+    return max(ids) + 1 if ids else 0
+
+
 def stream_window_counts_with_drops(
     spark: SparkSession,
     input_dir: str,
@@ -81,6 +92,7 @@ def stream_window_counts_with_drops(
         .agg(F.count("*").alias("n_events"))
         .select(F.col("win.start").alias("window_start"), "n_events")
     )
+    first_batch = _first_batch_id(checkpoint_dir)
     query = (
         agg.writeStream.format("parquet")
         .option("path", output_dir)
@@ -90,18 +102,19 @@ def stream_window_counts_with_drops(
         .start()
     )
     query.awaitTermination()
-    # recentProgress retains only the last ~numRecentProgressUpdates
-    # (default 100) batches: a replay longer than that would silently
-    # undercount drops (ADVICE r07) — assert instead of undercounting.
+    # recentProgress keeps fewer than numRecentProgressUpdates entries
+    # (Spark evicts while size >= the limit, so at most limit - 1): a
+    # longer run has lost its first batches' drop counts. Detect that
+    # from batch ids, not from the list length, and raise instead of
+    # undercounting.
     progress = list(query.recentProgress)
-    retention = int(
-        spark.conf.get("spark.sql.streaming.numRecentProgressUpdates", "100")
-    )
-    if len(progress) >= retention:
+    oldest = min((p["batchId"] for p in progress), default=first_batch)
+    if oldest > first_batch:
         raise RuntimeError(
-            f"stream_window_counts_with_drops: {len(progress)} progress updates "
-            f"reached the recentProgress retention limit ({retention}); drop "
-            "counts would be incomplete — raise the limit or use a listener"
+            "stream_window_counts_with_drops: recentProgress no longer holds "
+            f"batch {first_batch} (oldest kept: {oldest}); "
+            "drop counts would be incomplete — raise "
+            "spark.sql.streaming.numRecentProgressUpdates or use a listener"
         )
     dropped = 0
     for prog in progress:

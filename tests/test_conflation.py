@@ -209,3 +209,142 @@ def test_battery_big_batch_memory_bounded():
     # matched jittered pairs: all alive, tiny hausdorff
     assert (out["hausdorff_m"] >= 0).all()
     assert peak < 900 * 1024 * 1024, f"peak {peak/1e6:.0f} MB"
+
+
+def _walk(rng, n, start):
+    """Open polyline of n points drifting east ~50-100 m per step."""
+    import numpy as np
+
+    steps = np.column_stack([rng.uniform(5e-4, 1e-3, n - 1), rng.uniform(-5e-4, 5e-4, n - 1)])
+    return np.vstack([start, start + steps.cumsum(axis=0)])
+
+
+def test_battery_matches_scalar_kernels():
+    """geom_battery_udf's vectorized math against the scalar reference
+    kernels it restates: G.endpoint_match, G.is_same_geometry,
+    G.hausdorff_m, G.buffer_contains and the reference's lat/lon-swapped
+    compass_bearing rule (conflate.py:389-390). Seeded pairs cover equal
+    and unequal vertex counts, reversed copies and <=1 m jitter, copies
+    rotated 6 degrees near lon 75 (inside 5 degrees only under the
+    swapped bearing), copies whose endpoints match but whose interior
+    bends ~20 m away, plus closed sources that must skip every
+    alive-only column."""
+    import numpy as np
+    import pandas as pd
+
+    from osm_admin_boundary_conflation_spark.functions import geometry as G
+
+    rng = np.random.default_rng(5)
+
+    def jitter(c):
+        # <= 3e-6 deg per axis: under 0.5 m, well inside the 1 m rule
+        return c + rng.uniform(-3e-6, 3e-6, c.shape)
+
+    src, osm = [], []
+    for i in range(80):
+        kind = i % 8
+        start = rng.uniform([70, -5], [80, 5]) if kind == 5 else rng.uniform([-60, -50], [60, 50])
+        s = _walk(rng, int(rng.integers(3, 12)), start)
+        if kind == 0:  # same geometry, forward
+            o = jitter(s)
+        elif kind == 1:  # same geometry, reversed
+            o = jitter(s[::-1])
+        elif kind == 2:  # ~20 m parallel offset: inside the buffer, not same
+            o = s + np.array([0.0, 2e-4])
+        elif kind == 3:  # densified reversed copy: unequal vertex counts
+            mids = (s[:-1] + s[1:]) / 2.0
+            dense = np.empty((2 * len(s) - 1, 2))
+            dense[0::2], dense[1::2] = s, mids
+            o = jitter(dense[::-1])
+        elif kind == 4:  # unrelated way ~5 km away
+            o = _walk(rng, int(rng.integers(3, 12)), s[0] + np.array([0.05, 0.05]))
+        elif kind == 5:  # rotated 6 degrees about the start
+            t = np.radians(6.0)
+            rot = np.array([[np.cos(t), np.sin(t)], [-np.sin(t), np.cos(t)]])
+            o = s[0] + (s - s[0]) @ rot
+        elif kind == 6:  # endpoints match, interior vertices ~20 m off
+            o = jitter(s)
+            o[1:-1] += np.array([0.0, 2e-4])
+        else:  # closed source: ERROR_CLOSED_SHAPE path, no alive columns
+            s = np.vstack([s, s[:1]])
+            o = jitter(s)
+        src.append(s)
+        osm.append(o)
+
+    out = CF.geom_battery_udf.func(
+        pd.Series([s.tolist() for s in src]),
+        pd.Series([o.tolist() for o in osm]),
+        pd.Series([len(s) for s in src]),
+    )
+
+    def qbear(c):
+        return float(G.compass_bearing(c[0, 1], c[0, 0], c[-1, 1], c[-1, 0]))
+
+    n_same = n_heur = n_rev = 0
+    for i, (s, o) in enumerate(zip(src, osm)):
+        r = out.iloc[i]
+        assert not r["invalid"] and not r["too_many"], i
+        if i % 8 == 7:
+            assert r["closed"] and not r["same"] and not r["heuristic_same"], i
+            assert r["hausdorff_m"] == -1.0 and np.isinf(r["endpoint_dist_m"]), i
+            continue
+        assert not r["closed"], i
+        same = G.is_same_geometry(s, o)
+        assert r["same"] == same, i
+        assert np.isclose(r["hausdorff_m"], G.hausdorff_m(s, o), rtol=1e-9), i
+        if same:
+            n_same += 1
+            assert np.isinf(r["endpoint_dist_m"]) and not r["should_reverse"], i
+            assert not r["heuristic_same"], i
+            continue
+        dist, rev = G.endpoint_match(s, o)
+        assert np.isclose(r["endpoint_dist_m"], dist, rtol=1e-9), i
+        assert r["should_reverse"] == rev, i
+        aligned = s[::-1] if rev else s
+        heur = G.buffer_contains(o, aligned) and abs(qbear(o) - qbear(aligned)) < 5.0
+        assert r["heuristic_same"] == heur, i
+        n_rev += rev
+        n_heur += heur
+    # every branch of the battery was exercised
+    assert n_same >= 10 and n_heur >= 10 and n_rev >= 10
+
+
+def test_edit_plan_updates_follow_aligned_source(spark):
+    """edit_plan reverses a source way whose last point is nearer the
+    osm start (G7): every update moves osm node ``pos`` onto the
+    ALIGNED source point ``pos``. Edit counts cannot see a wrong
+    reversal, so this pins the coordinates. Way 3 is a closed source:
+    equal endpoint distances, so it keeps its order."""
+    from osm_admin_boundary_conflation_spark.operators.edit_plan import edit_plan
+
+    fwd = [[20.0, 44.0], [20.001, 44.0], [20.002, 44.001], [20.003, 44.001]]
+    rev_src = [[21.003, 44.001], [21.002, 44.001], [21.001, 44.0], [21.0, 44.0]]
+    rev_osm = [[21.0, 44.0], [21.001, 44.0], [21.002, 44.001], [21.003, 44.001]]
+    ring = [[22.0, 44.0], [22.001, 44.0], [22.001, 44.001], [22.0, 44.0]]
+    ring_osm = [[22.0, 44.0], [22.0, 44.001], [22.001, 44.001], [22.0, 44.0]]
+    src = {1: fwd, 2: rev_src, 3: ring}
+    aligned = {1: fwd, 2: rev_src[::-1], 3: ring}
+    osm = {1: fwd, 2: rev_osm, 3: ring_osm}
+
+    verdicts = spark.createDataFrame(
+        [(w, 100 + w, "CHECKED_POSSIBLE") for w in src],
+        "way_id long, osm_way_id long, verdict string",
+    )
+    src_ways = spark.createDataFrame(
+        list(src.items()), "way_id long, coords array<array<double>>"
+    )
+    osm_ways = spark.createDataFrame(
+        [(100 + w, [1000 * w + k for k in range(len(c))], c) for w, c in osm.items()],
+        "osm_way_id long, node_ids array<long>, coords array<array<double>>",
+    )
+    ups = [
+        r
+        for r in edit_plan(verdicts, src_ways, osm_ways).collect()
+        if r["op"] == "update"
+    ]
+    assert sorted((r["way_id"], r["pos"]) for r in ups) == [
+        (w, p) for w in (1, 2, 3) for p in range(4)
+    ]
+    for r in ups:
+        assert r["node_id"] == 1000 * r["way_id"] + r["pos"]
+        assert [r["lon"], r["lat"]] == aligned[r["way_id"]][r["pos"]], r

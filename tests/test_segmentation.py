@@ -6,6 +6,35 @@ from osm_admin_boundary_conflation_spark import datagen_osm
 from osm_admin_boundary_conflation_spark.operators import segmentation as SG
 
 
+def split_way_ref(nodes, corners) -> list[list[int]]:
+    """G13 reference splitter in plain Python: split a way's node list at
+    corner positions; closed ways wrap around, the piece after the last
+    corner merging with the piece before the first
+    (translation.py:72-79)."""
+    nodes = list(nodes)
+    if not nodes:
+        return []
+    closed = len(nodes) > 1 and nodes[0] == nodes[-1]
+    core = nodes[:-1] if closed else nodes
+    idxs = sorted(int(i) for i in (corners or []) if i < len(core))
+    if not idxs:
+        return [nodes]
+    if closed:
+        k = len(idxs)
+        segs = [core[idxs[j] : idxs[j + 1] + 1] for j in range(k - 1)]
+        segs.append(core[idxs[-1] :] + core[: idxs[0] + 1])  # wraparound merge
+        return segs
+    segs = []
+    prev = 0
+    for i in idxs:
+        if i > prev:
+            segs.append(core[prev : i + 1])
+        prev = i
+    if prev < len(core) - 1:
+        segs.append(core[prev:])
+    return segs
+
+
 def _run(spark, sf_dir):
     ways = datagen_osm.build_strip_world(spark, sf_dir)
     out = SG.segment_ways(ways)
@@ -80,8 +109,8 @@ def test_lint_observed_metrics(spark):
 
 def test_distributed_splitter_matches_udf(spark, sf_dir):
     """split_ways_distributed must produce byte-identical segments to the
-    Arrow-UDF splitter on the same input — full strip world, forced down
-    both paths via the threshold."""
+    per-way split_way_expr path on the same input — full strip world,
+    forced down both paths via the threshold."""
     import osm_admin_boundary_conflation_spark.operators.segmentation as seg_mod
 
     ways = datagen_osm.build_strip_world(spark, sf_dir)
@@ -97,7 +126,7 @@ def test_distributed_splitter_matches_udf(spark, sf_dir):
     try:
         seg_mod.SPLIT_DISTRIBUTED_MIN = 1  # everything distributed
         a = run()
-        seg_mod.SPLIT_DISTRIBUTED_MIN = 10**9  # everything Arrow UDF
+        seg_mod.SPLIT_DISTRIBUTED_MIN = 10**9  # everything split_way_expr
         b = run()
     finally:
         seg_mod.SPLIT_DISTRIBUTED_MIN = old
@@ -106,10 +135,8 @@ def test_distributed_splitter_matches_udf(spark, sf_dir):
 
 def test_distributed_splitter_randomized(spark):
     """Randomized differential check: open/closed ways with random
-    corner sets — the window splitter equals the UDF splitter."""
+    corner sets — the window splitter equals the reference splitter."""
     import random
-
-    import osm_admin_boundary_conflation_spark.operators.segmentation as seg_mod
 
     rng = random.Random(7)
     rows = []
@@ -127,32 +154,31 @@ def test_distributed_splitter_randomized(spark):
     corners = spark.createDataFrame([(n,) for n in corner_ids], "node_id long")
 
     dist = SG.split_ways_distributed(ways, corners)
-    got_a = sorted(
-        (r["way_id"], tuple(r["seg_nodes"])) for r in dist.collect()
-    )
+    got = sorted((r["way_id"], tuple(r["seg_nodes"])) for r in dist.collect())
 
-    import pyspark.sql.functions as F
+    corner_set = set(corner_ids)
+    want = sorted(
+        (wid, tuple(seg))
+        for wid, nodes, _ in rows
+        for seg in split_way_ref(nodes, [p for p, n in enumerate(nodes) if n in corner_set])
+    )
+    assert got == want
 
-    pos = ways.select("way_id", F.posexplode("node_ids").alias("pos", "node_id"))
-    corner_pos = (
-        pos.join(corners, "node_id")
-        .groupBy("way_id")
-        .agg(F.array_sort(F.collect_set("pos")).alias("corner_pos"))
-    )
-    w = ways.join(corner_pos, "way_id", "left").withColumn(
-        "corner_pos", F.coalesce("corner_pos", F.array().cast("array<int>"))
-    )
-    udf_out = w.select(
-        "way_id", F.explode(SG.split_way_udf(F.col("node_ids"), F.col("corner_pos"))).alias("seg_nodes")
-    )
-    got_b = sorted((r["way_id"], tuple(r["seg_nodes"])) for r in udf_out.collect())
-    assert got_a == got_b
+
+def _split_expr(df):
+    """{id: segments} from split_way_expr over (id, node_ids, corner_pos)."""
+    return {
+        r["id"]: [list(s) for s in r["segs"]]
+        for r in df.select(
+            "id", SG.split_way_expr(F.col("node_ids"), F.col("corner_pos")).alias("segs")
+        ).collect()
+    }
 
 
 def test_split_expr_matches_udf_edge_cases(spark):
-    """split_way_expr (JVM) ≡ split_way_udf (Arrow) on the full edge
-    matrix: open/closed, corners at 0 / n-1 / adjacent / none / all,
-    single-node ways, empty corner lists, corners past the core."""
+    """split_way_expr (JVM) ≡ split_way_ref on the full edge matrix:
+    open/closed, corners at 0 / n-1 / adjacent / none / all, single-node
+    ways, empty corner lists, corners past the core."""
     cases = [
         ([], []),
         ([1], []),
@@ -181,24 +207,12 @@ def test_split_expr_matches_udf_edge_cases(spark):
     df = spark.createDataFrame(
         rows, "id long, node_ids array<long>, corner_pos array<int>"
     )
-    got_expr = {
-        r["id"]: [list(s) for s in r["segs"]]
-        for r in df.select(
-            "id", SG.split_way_expr(F.col("node_ids"), F.col("corner_pos")).alias("segs")
-        ).collect()
-    }
-    got_udf = {
-        r["id"]: [list(s) for s in r["segs"]]
-        for r in df.select(
-            "id", SG.split_way_udf(F.col("node_ids"), F.col("corner_pos")).alias("segs")
-        ).collect()
-    }
-    assert got_expr == got_udf
+    assert _split_expr(df) == {i: split_way_ref(n, c) for i, n, c in rows}
 
 
 def test_split_expr_randomized_vs_udf(spark):
     """Randomized differential: 200 random open/closed ways with random
-    corner subsets — JVM expression equals the Arrow UDF."""
+    corner subsets — JVM expression equals the reference splitter."""
     import random
 
     rng = random.Random(11)
@@ -213,16 +227,4 @@ def test_split_expr_randomized_vs_udf(spark):
     df = spark.createDataFrame(
         rows, "id long, node_ids array<long>, corner_pos array<int>"
     )
-    a = {
-        r["id"]: [list(s) for s in r["segs"]]
-        for r in df.select(
-            "id", SG.split_way_expr(F.col("node_ids"), F.col("corner_pos")).alias("segs")
-        ).collect()
-    }
-    b = {
-        r["id"]: [list(s) for s in r["segs"]]
-        for r in df.select(
-            "id", SG.split_way_udf(F.col("node_ids"), F.col("corner_pos")).alias("segs")
-        ).collect()
-    }
-    assert a == b
+    assert _split_expr(df) == {i: split_way_ref(n, c) for i, n, c in rows}

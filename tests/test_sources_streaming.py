@@ -168,3 +168,67 @@ def test_stream_dedup_suppresses_across_batches(spark, tmp_path):
         .collect()
     }
     assert got == want and len(got) == 3
+
+
+def _write_batch(spark, in_dir, i, stamps):
+    """Append one parquet file of events at ``stamps``, its mtime pinned
+    so the file source replays files (one per batch) in ``i`` order."""
+    import os
+
+    from osm_admin_boundary_conflation_spark.streaming.stream_windows import EVENTS_DDL
+
+    before = set(os.listdir(in_dir)) if os.path.isdir(in_dir) else set()
+    rows = [(i * 1000 + j, ts, 1, "view", 1.0, "") for j, ts in enumerate(stamps)]
+    spark.createDataFrame(rows, EVENTS_DDL).coalesce(1).write.mode("append").parquet(in_dir)
+    t = 1_600_000_000 + 100 * i
+    for f in set(os.listdir(in_dir)) - before:
+        if f.endswith(".parquet"):
+            os.utime(os.path.join(in_dir, f), (t, t))
+
+
+def test_late_drop_retention_guard(spark, tmp_path):
+    """recentProgress keeps at most numRecentProgressUpdates - 1 entries.
+    At a limit of 3, a resumed 2-batch run still holds every batch and
+    returns the exact drop count; a fresh 3-batch run has lost batch 0
+    and must raise rather than undercount."""
+    import datetime as dt
+
+    import pytest
+
+    from osm_admin_boundary_conflation_spark.streaming.stream_windows import (
+        stream_window_counts_with_drops,
+    )
+
+    day2_early = [dt.datetime(2024, 1, 2, h, m) for h in range(0, 5) for m in (5, 35)]
+    day2_late = [dt.datetime(2024, 1, 2, h, m) for h in range(5, 9) for m in (5, 35)]
+    # three stragglers in two distinct hour windows: the drop counter
+    # counts post-aggregation state rows, one per late window
+    stragglers = [
+        dt.datetime(2024, 1, 1, 3, 10),
+        dt.datetime(2024, 1, 1, 3, 20),
+        dt.datetime(2024, 1, 1, 5, 0),
+    ]
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "3")
+    try:
+        resumed = tmp_path / "resumed"
+        ind, out, ck = (str(resumed / d) for d in ("in", "out", "ck"))
+        _write_batch(spark, ind, 0, day2_early)
+        assert stream_window_counts_with_drops(spark, ind, out, ck) == 0
+        # the resumed run starts past the first run's committed batches
+        _write_batch(spark, ind, 1, day2_late)
+        _write_batch(spark, ind, 2, stragglers)
+        assert stream_window_counts_with_drops(spark, ind, out, ck) == 2
+
+        fresh = tmp_path / "fresh"
+        ind, out, ck = (str(fresh / d) for d in ("in", "out", "ck"))
+        for i, stamps in enumerate((day2_early, day2_late, stragglers)):
+            _write_batch(spark, ind, i, stamps)
+        with pytest.raises(RuntimeError, match="recentProgress"):
+            stream_window_counts_with_drops(spark, ind, out, ck)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
